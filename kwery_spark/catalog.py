@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+from collections import OrderedDict
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,15 +35,54 @@ TABLES = (
 ALWAYS_SMALL = frozenset({"region", "nation"})
 
 
-# Scan-plan cache: file listing + parquet footer/schema read cost
-# ~100 ms of driver time per spark.read.parquet call; a multiway join
-# rebuilds six of them per query. DataFrames are immutable logical plans,
-# so reusing one per (session, dir, table) is safe and stands in for a
-# real engine's catalog metadata cache. Keyed by applicationId (stable,
-# unique per SparkContext — unlike id(spark), which CPython can reuse
-# after a stopped session is garbage-collected, handing a new session
-# plans bound to a dead JVM).
-_SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# One session memo for every artifact the engine reuses across a
+# session's queries: scan plans, catalog probes, plan-time scalar
+# collects and checkpointed shared frames. Keys are prefixed with the
+# SparkContext's application id (stable and unique per context — unlike
+# id(spark), which CPython can reuse after a stopped session is
+# garbage-collected), so a stopped session's entries are never handed to
+# a new context, whose checkpoint RDDs and scan plans would be dead.
+# The caller's key starts with a kind, and each kind is its own LRU with
+# its own cap; evicted checkpointed frames release their files through
+# the session's cleanCheckpoints GC hook. One RLock guards every access
+# and is held across a build, so each artifact is built once even under
+# concurrent callers, and a build may itself memoize (_purchase_edges
+# builds _pair_weights). Lock order: this lock before _AQE_FLIP_LOCK
+# (graph builds checkpoint through snap_captured; a snap never memoizes).
+_MEMO: dict[str, OrderedDict] = {}
+_MEMO_LOCK = threading.RLock()
+# scan plans and catalog probes: a q5 build alone touches 6+ tables, so
+# their cap sits above anything one session addresses
+_MEMO_CAPS = {"scan": 64, "db": 64, "graph": 8, "contracted_docs": 4}
+_MEMO_CAP_DEFAULT = 8
+
+
+def memo(spark: SparkSession, key: tuple, build=None):
+    """The value memoized under ``key`` for this session, else ``None``
+    when ``build`` is omitted; with a ``build``, a miss calls it and
+    stores the result unless it is ``None`` (negative probes must keep
+    probing). ``key[0]`` names the kind, which sets the LRU cap."""
+    full = (spark.sparkContext.applicationId, *key)
+    with _MEMO_LOCK:
+        entries = _MEMO.setdefault(key[0], OrderedDict())
+        hit = entries.get(full)
+        if hit is not None:
+            entries.move_to_end(full)
+            return hit
+        if build is None:
+            return None
+        value = build()
+        if value is not None:
+            entries[full] = value
+            while len(entries) > _MEMO_CAPS.get(key[0], _MEMO_CAP_DEFAULT):
+                entries.popitem(last=False)
+        return value
+
+
+def memo_clear() -> None:
+    """Forget every memoized entry (tests and cold-start A/Bs)."""
+    with _MEMO_LOCK:
+        _MEMO.clear()
 
 
 # Optimized physical layouts (see optimize_layout): sf_dir -> directory
@@ -49,10 +90,6 @@ _SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 # by an explicit optimize_layout call (bench prep); every other session
 # reads the raw testdata files.
 _OPTIMIZED: dict[str, str] = {}
-
-# Positive results of the stats_db / bucketed_db catalog probes, keyed on
-# (applicationId, db name) — see stats_db for the invalidation argument.
-_DB_PROBE_CACHE: set[tuple[str, str]] = set()
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -64,18 +101,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # every query obtains its tables.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     opt = _OPTIMIZED.get(sf_dir)
-    key = (spark.sparkContext.applicationId, opt or sf_dir, name)
-    df = _SCAN_CACHE.get(key)
-    if df is None:
+
+    def build():
         if opt is not None:
             # optimized copies were written by Spark itself: events.ts is
             # already a µs timestamp there — plain reads for every table
-            df = spark.read.parquet(os.path.join(opt, f"{name}.parquet"))
-        else:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            df = _events(spark, path) if name == "events" else spark.read.parquet(path)
-        _SCAN_CACHE[key] = df
-    return df
+            return spark.read.parquet(os.path.join(opt, f"{name}.parquet"))
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        return _events(spark, path) if name == "events" else spark.read.parquet(path)
+
+    # Scan-plan memo: file listing + parquet footer/schema read cost
+    # ~100 ms of driver time per spark.read.parquet call, and a multiway
+    # join rebuilds six of them per query. DataFrames are immutable
+    # logical plans, so reusing one per (session, dir, table) is safe and
+    # stands in for a real engine's catalog metadata cache.
+    return memo(spark, ("scan", opt or sf_dir, name), build)
 
 
 def _events(spark: SparkSession, path: str) -> DataFrame:
@@ -163,6 +203,9 @@ def round6_sql(expr: str) -> str:
     return f"floor(({expr}) * 1000000.0 + 0.5) / 1000000.0"
 
 
+_AQE_FLIP_LOCK = threading.Lock()
+
+
 def snap_captured(df: DataFrame, snap):
     """Materialize a checkpoint with AQE disabled for THAT one query so
     the resulting LogicalRDD captures the physical outputPartitioning
@@ -175,22 +218,24 @@ def snap_captured(df: DataFrame, snap):
     wherever sessions run AQE-on (sf10+ bench sections, all sweeps).
     The snapped query is typically one shuffle+agg with a partition
     count already scale-set by session/sweep confs, so losing AQE for
-    just that query is noise; everything downstream keeps AQE. Kill
-    switch ``spark.kwery.ckpt.capture=false`` restores the old behavior
-    for A/B probes.
+    just that query is noise; everything downstream keeps AQE.
+
+    ``spark.sql.adaptive.enabled`` is session-wide, so the flip and its
+    restore happen under one module lock: concurrent callers snap one at
+    a time, and none can restore "false" captured from another's flip.
+    Queries other threads plan inside that window still see AQE off.
 
     ``snap`` is the materializer, e.g.
     ``lambda d: d.localCheckpoint(eager=True)``.
     """
     spark = df.sparkSession
-    if (spark.conf.get("spark.kwery.ckpt.capture", "true") or "").lower() == "false":
-        return snap(df)
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return snap(df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    with _AQE_FLIP_LOCK:
+        prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return snap(df)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def lckpt(df: DataFrame) -> DataFrame:
@@ -246,7 +291,9 @@ def optimize_layout(spark: SparkSession, sf_dir: str) -> str:
     Returns the optimized directory. Re-runs are skipped via a
     fingerprint marker over the raw files' (size, mtime); the marker
     embeds a layout version so an encoding change rebuilds stale dirs."""
-    out = os.path.join(_SCRATCH, "optimized", os.path.basename(sf_dir.rstrip("/")))
+    from kwery_spark.sources.scans import SCRATCH
+
+    out = os.path.join(SCRATCH, "optimized", os.path.basename(sf_dir.rstrip("/")))
     os.makedirs(out, exist_ok=True)
     marker = os.path.join(out, "_OPTIMIZED_v6_" + _corpus_fingerprint(sf_dir))
     if not os.path.exists(marker):
@@ -364,19 +411,11 @@ def slim_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     if out:
         p = os.path.join(out, "customer_slim.parquet")
         if os.path.exists(p):
-            # routed through the scan-plan cache like every other table:
+            # routed through the scan-plan memo like every other table:
             # the uncached read cost a footer/schema-inference driver job
             # on EVERY query build (q5 job census, r12)
-            key = (spark.sparkContext.applicationId, out, "customer_slim")
-            df = _SCAN_CACHE.get(key)
-            if df is None:
-                df = spark.read.parquet(p)
-                _SCAN_CACHE[key] = df
-            return df
+            return memo(spark, ("scan", out, "customer_slim"), lambda: spark.read.parquet(p))
     return table(spark, sf_dir, "customer").select(*_SLIM_COLS)
-
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
 
 def _corpus_fingerprint(sf_dir: str) -> str:
@@ -610,21 +649,19 @@ def stats_db(spark: SparkSession, sf_dir: str) -> str | None:
         # renamed corpus file must mean "no stats db", not an OSError
         # escaping a probe that is documented to be safe (ADVICE r3)
         db = _db_name(sf_dir, optimized=sf_dir in _OPTIMIZED)
-        key = (spark.sparkContext.applicationId, db)
-        if key in _DB_PROBE_CACHE:
-            return db
-        if spark.catalog.tableExists(f"{db}.lineitem"):
-            # memoize POSITIVE probes only (r12): tableExists is a py4j
-            # metastore round trip paid on every query BUILD (~10-40 ms,
-            # two probes per CBO-path query); a db that exists stays
-            # valid for the session (fingerprint-named, stale siblings
-            # are dropped before builds, never mid-session). A negative
-            # must keep probing so the prep step can flip it.
-            _DB_PROBE_CACHE.add(key)
-            return db
+        # memoize POSITIVE probes only (r12): tableExists is a py4j
+        # metastore round trip paid on every query BUILD (~10-40 ms, two
+        # probes per CBO-path query); a db that exists stays valid for
+        # the session (fingerprint-named, stale siblings are dropped
+        # before builds, never mid-session). A negative (None) is not
+        # stored, so the prep step can still flip it.
+        return memo(
+            spark,
+            ("db", db),
+            lambda: db if spark.catalog.tableExists(f"{db}.lineitem") else None,
+        )
     except Exception:
-        pass
-    return None
+        return None
 
 
 def cbo_active(spark: SparkSession) -> bool:
@@ -753,35 +790,29 @@ def bucketed_db(spark: SparkSession, sf_dir: str) -> str | None:
     never raises on a missing corpus."""
     try:
         db = _bucketed_db_name(sf_dir)
-        key = (spark.sparkContext.applicationId, db)
-        if key in _DB_PROBE_CACHE:
-            return db
-        if spark.catalog.tableExists(f"{db}.lineitem") and _has_row_stats(
-            spark, f"{db}.lineitem"
-        ):
+
+        def probe():
             # tableExists AND row stats — the same completeness probe
             # build_bucketed uses (stats are written last, so a build
             # that died mid-way never memoizes as usable; ADVICE r12)
-            # positive-only probe memo — see stats_db (r12)
-            _DB_PROBE_CACHE.add(key)
-            return db
+            full = f"{db}.lineitem"
+            if spark.catalog.tableExists(full) and _has_row_stats(spark, full):
+                return db
+            return None
+
+        # positive-only probe memo — see stats_db (r12)
+        return memo(spark, ("db", db), probe)
     except Exception:
-        pass
-    return None
+        return None
 
 
 def bucketed_table(spark: SparkSession, db: str, name: str) -> DataFrame:
-    """``spark.table(f"{db}.{name}")`` through the scan-plan cache: the
+    """``spark.table(f"{db}.{name}")`` through the scan-plan memo: the
     raw call resolves through the metastore on EVERY query build
     (~20-40 ms of py4j+HMS per table, two tables per bucketed fact
     query). A catalog-table DataFrame is an immutable scan plan like
     the parquet reads table() caches — no shuffle to stage-skip."""
-    key = (spark.sparkContext.applicationId, db, name)
-    df = _SCAN_CACHE.get(key)
-    if df is None:
-        df = spark.table(f"{db}.{name}")
-        _SCAN_CACHE[key] = df
-    return df
+    return memo(spark, ("scan", db, name), lambda: spark.table(f"{db}.{name}"))
 
 
 def cache_tables(spark: SparkSession, sf_dir: str) -> None:

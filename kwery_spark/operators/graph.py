@@ -21,59 +21,45 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import table
+from kwery_spark.catalog import memo, table
 from kwery_spark.registry import register
 
 _D = 0.85  # damping
 
 
 # ---------------------------------------------------------------------------
-# Session-scoped shared-artifact cache (VERDICT r10 item 4): the graph
+# Session-scoped shared artifacts (VERDICT r10 item 4): the graph
 # family's keys all derive from the same weighted customer-supplier pair
 # table, and at sf30 each key paid the ~350M-edge build again — the r9
 # decomposition proved the BUILD dominates every iterative key, not the
-# rounds. Checkpointed artifacts are memoized per (Spark application,
-# resolved sf_dir, lineitem corpus fingerprint), so:
+# rounds. Checkpointed artifacts live in the session memo (catalog.memo,
+# kind "graph", LRU of 8) keyed on (resolved sf_dir, source-table corpus
+# fingerprint, artifact), so:
 #   * a standalone run (check.py, driver gate, audit) builds exactly what
 #     it always built — first-touch plans are unchanged;
 #   * a multi-key session (scale sweep, full gate, bench) pays each build
 #     once and every later consumer starts from the checkpoint scan.
 # Keying on the corpus fingerprint means a regenerated corpus can never
-# serve stale edges; keying on applicationId means a stopped session's
-# entries can never be handed to a new context (their checkpoint RDDs
-# would be dead). Bounded LRU — evicted entries release their checkpoint
-# files through the session's cleanCheckpoints GC hook.
-from collections import OrderedDict
-
-_SHARED: "OrderedDict[tuple, object]" = OrderedDict()
-_SHARED_CAP = 8
-
-
-def _shared_key(spark: SparkSession, sf_dir: str, table_name: str, artifact: str):
+# serve stale edges.
+def _artifact_key(sf_dir: str, artifact: str, table_name: str = "lineitem") -> tuple:
     import os
 
     from kwery_spark.sources.scans import _corpus_fingerprint
 
     return (
-        spark.sparkContext.applicationId,
+        "graph",
         os.path.realpath(sf_dir),
         _corpus_fingerprint(sf_dir, table_name),
         artifact,
     )
 
 
-def _shared_get(spark, sf_dir, artifact, table_name="lineitem"):
-    key = _shared_key(spark, sf_dir, table_name, artifact)
-    hit = _SHARED.get(key)
-    if hit is not None:
-        _SHARED.move_to_end(key)
-    return hit
-
-
-def _shared_put(spark, sf_dir, artifact, value, table_name="lineitem"):
-    _SHARED[_shared_key(spark, sf_dir, table_name, artifact)] = value
-    while len(_SHARED) > _SHARED_CAP:
-        _SHARED.popitem(last=False)
+def _shared_pair_weights(spark: SparkSession, sf_dir: str):
+    """The session's _pair_weights checkpoint if some key already built
+    it (either arm), else None — never builds."""
+    return memo(spark, _artifact_key(sf_dir, "pair_weights")) or memo(
+        spark, _artifact_key(sf_dir, "pair_weights_bkt")
+    )
 
 
 from kwery_spark.catalog import lckpt as _lckpt
@@ -101,13 +87,11 @@ def _ckpt(df: DataFrame) -> DataFrame:
     import os
     import shutil
 
+    from kwery_spark.sources.scans import SCRATCH
+
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
-        root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-            ".scratch",
-            "checkpoints",
-        )
+        root = os.path.join(SCRATCH, "checkpoints")
         os.makedirs(root, exist_ok=True)
         # Reliable checkpoints are only auto-cleaned while the context
         # lives (cleanCheckpoints GC hook, set in session.py); whatever a
@@ -143,96 +127,87 @@ def _pair_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE canonical shared graph artifact (r11): the weighted distinct
     customer-supplier pair table (c=2*custkey, s=2*suppkey+1, wt =
     lineitem multiplicity), c-partitioned and disk-checkpointed, memoized
-    per session+corpus (_SHARED). Every graph key is a projection of it:
-    the bidirected edge set is its key set, LPA's degree caps are windows
-    over wt, common-neighbor weights ARE wt, degrees are its per-key
-    counts. One 60M-row (sf10) join feeds the whole family instead of
-    each key re-paying it — at sf30 the build dominated all three
-    iterative keys (r9 decomposition)."""
+    per session+corpus (catalog.memo). Every graph key is a projection of
+    it: the bidirected edge set is its key set, LPA's degree caps are
+    windows over wt, common-neighbor weights ARE wt, degrees are its
+    per-key counts. One 60M-row (sf10) join feeds the whole family
+    instead of each key re-paying it — at sf30 the build dominated all
+    three iterative keys (r9 decomposition)."""
     # ADVICE r14: the effective arm (bucketed zipper vs raw scans) is
     # resolved BEFORE the memo probe and folded into the artifact name,
     # so flipping the spark.kwery.bucketed kill switch mid-session can
     # never silently serve the other arm's checkpoint (rows are
     # identical either way — this is for honest A/B tooling, which
-    # previously had to remember to clear _SHARED).
+    # previously had to remember to clear the memo).
     from kwery_spark.catalog import bucketed_db, bucketed_table
 
     bdb = None
     if (spark.conf.get("spark.kwery.bucketed", "true") or "").lower() != "false":
         bdb = bucketed_db(spark, sf_dir)
     artifact = "pair_weights_bkt" if bdb is not None else "pair_weights"
-    hit = _shared_get(spark, sf_dir, artifact)
-    if hit is not None:
-        return hit
-    # r14 (VERDICT r13 item 4): when the orderkey-bucketed warehouse
-    # layout exists (bench _prep builds it; the offline-maintenance
-    # class), the orders⋈lineitem feed zips bucket-to-bucket with ZERO
-    # exchange on either input — measured sf30 fresh-JVM A/B: build+ckpt
-    # 58.7 s (raw scans, both sides shuffled) → 42.1 s (zipper), rows
-    # identical (176,061,300). At 100 TB this is the co-located fact
-    # layout every warehouse keeps anyway. Raw fallback otherwise (the
-    # sweep protocol reads raw corpora); same kill switch as
-    # tpch._maybe_bucketed. Measured non-levers for the raw arm, so the
-    # next reader doesn't re-chase them: spark.checkpoint.compress
-    # shrinks the 8.3 GB checkpoint 7.5x but costs ~+5 s write for
-    # ~-1.1 s/read (two interleaved A/B pairs — null for a single-key
-    # build, marginal family-wide); map-side partial agg <2% (r12,
-    # multiplicity ~1.015); the repartition(c) is load-bearing (every
-    # zip consumer) and the sort feeds LPA's window.
-    if bdb is not None:
-        li = bucketed_table(spark, bdb, "lineitem").select(
-            "l_orderkey", "l_suppkey"
+
+    def build():
+        # r14 (VERDICT r13 item 4): when the orderkey-bucketed warehouse
+        # layout exists (bench _prep builds it; the offline-maintenance
+        # class), the orders⋈lineitem feed zips bucket-to-bucket with ZERO
+        # exchange on either input — measured sf30 fresh-JVM A/B:
+        # build+ckpt 58.7 s (raw scans, both sides shuffled) → 42.1 s
+        # (zipper), rows identical (176,061,300). At 100 TB this is the
+        # co-located fact layout every warehouse keeps anyway. Raw fallback
+        # otherwise (the sweep protocol reads raw corpora); same kill
+        # switch as tpch._maybe_bucketed. Measured non-levers for the raw
+        # arm, so the next reader doesn't re-chase them:
+        # spark.checkpoint.compress shrinks the 8.3 GB checkpoint 7.5x but
+        # costs ~+5 s write for ~-1.1 s/read (two interleaved A/B pairs —
+        # null for a single-key build, marginal family-wide); map-side
+        # partial agg <2% (r12, multiplicity ~1.015); the repartition(c)
+        # is load-bearing (every zip consumer) and the sort feeds LPA's
+        # window.
+        if bdb is not None:
+            li = bucketed_table(spark, bdb, "lineitem").select(
+                "l_orderkey", "l_suppkey"
+            )
+            orders = bucketed_table(spark, bdb, "orders").select(
+                "o_orderkey", "o_custkey"
+            )
+        else:
+            li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+            orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+        # c-partitioned + sorted before the checkpoint (LPA's customer-side
+        # cap window runs exchange-free off it, the r9 LPA layout). Design
+        # A/B/C measured at sf10 (family totals 215.7 / 230.9 / 251.0 s vs
+        # 283.0 r10): routing every edge consumer through this one sorted
+        # checkpoint costs the FIRST builder ~+40 s but repays it twice
+        # over in LPA/common-neighbors/degree reuse — family total is the
+        # graded quantity, so the shared artifact is imposed, not
+        # opportunistic. r12 fuse: repartition(c) BEFORE the groupBy —
+        # HashPartitioning(c) satisfies the (c,s) aggregation's clustered
+        # distribution, so the agg runs exchange-free on the c-partitioned
+        # stream and the old shape's SECOND 176M-row exchange (post-agg
+        # repartition) vanishes. The map-side partial agg it gives up was
+        # worthless here: the corpus averages ~1.015 lineitems per
+        # distinct pair, so partial aggregation shrank the shuffle <2%.
+        # Measured sf30 fresh-JVM: LPA cold total 128.2 s (old) → 123.0 s
+        # (fused), identical values. Two alternatives were measured and
+        # rejected in r16 (commit 0b3ebb4): a SHUFFLE_HASH hint on the
+        # orders side won ~11% at sf10 but regressed the family 284->349 s
+        # at sf30, and dropping the stored sort lost sf10 137.02 vs
+        # 99.95 s family total once checkpoint capture worked — the sort
+        # elides the per-round SMJ sorts.
+        pre = (
+            li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .select(
+                (F.col("o_custkey") * 2).alias("c"),
+                (F.col("l_suppkey") * 2 + 1).alias("s"),
+            )
+            .repartition("c")
+            .groupBy("c", "s")
+            .agg(F.count(F.lit(1)).alias("wt"))
+            .sortWithinPartitions("c")
         )
-        orders = bucketed_table(spark, bdb, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-    else:
-        li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # c-partitioned + sorted before the checkpoint (LPA's customer-side
-    # cap window runs exchange-free off it, the r9 LPA layout). Design
-    # A/B/C measured at sf10 (family totals 215.7 / 230.9 / 251.0 s vs
-    # 283.0 r10): routing every edge consumer through this one sorted
-    # checkpoint costs the FIRST builder ~+40 s but repays it twice over
-    # in LPA/common-neighbors/degree reuse — family total is the graded
-    # quantity, so the shared artifact is imposed, not opportunistic.
-    # r12 fuse: repartition(c) BEFORE the groupBy — HashPartitioning(c)
-    # satisfies the (c,s) aggregation's clustered distribution, so the
-    # agg runs exchange-free on the c-partitioned stream and the old
-    # shape's SECOND 176M-row exchange (post-agg repartition) vanishes.
-    # The map-side partial agg it gives up was worthless here: the
-    # corpus averages ~1.015 lineitems per distinct pair, so partial
-    # aggregation shrank the shuffle <2%. Measured sf30 fresh-JVM: LPA
-    # cold total 128.2 s (old) → 123.0 s (fused), identical values.
-    # r16 probe knob (tools/probes/pair_weights_arms.py): "nosort" drops
-    # the stored sort, "shj" adds a SHUFFLE_HASH hint on the orders side
-    # of the orderkey join. Default "" keeps the committed design.
-    # Both arms MEASURED AND REJECTED in r16: shj won ~11% at sf10 but
-    # regressed the family 284->349 s at sf30 (pagerank 184 s — the
-    # per-partition hash build loses to sorted merge once |orders|/64
-    # outgrows cache); nosort "won" only while checkpoint capture was
-    # broken (UnknownPartitioning — see _snap_captured). With capture
-    # fixed, the stored sort elides the per-round SMJ sorts and the
-    # sorted arm wins sf10 99.95 vs 137.02 s family total (pagerank
-    # 47.9 vs 78.5). Keep the sort.
-    arm = spark.conf.get("spark.kwery.pairweights.arm", "") or ""
-    if "shj" in arm:
-        orders = orders.hint("shuffle_hash")
-    pre = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .repartition("c")
-        .groupBy("c", "s")
-        .agg(F.count(F.lit(1)).alias("wt"))
-    )
-    if "nosort" not in arm:
-        pre = pre.sortWithinPartitions("c")
-    w = _ckpt(pre)
-    _shared_put(spark, sf_dir, artifact, w)
-    return w
+        return _ckpt(pre)
+
+    return memo(spark, _artifact_key(sf_dir, artifact), build)
 
 
 def _purchase_edges(
@@ -262,38 +237,39 @@ def _purchase_edges(
     _pair_weights), and the finished edge frame is memoized per
     session+corpus, so a with-degree build also serves plain-edge
     consumers (srcdeg dropped) and any later consumer in the session."""
-    variant = "edges_deg" if with_degree else "edges"
-    hit = _shared_get(spark, sf_dir, variant)
+    key = _artifact_key(sf_dir, "edges_deg" if with_degree else "edges")
+    hit = memo(spark, key)
     if hit is not None:
         return hit
     if not with_degree:
-        deg = _shared_get(spark, sf_dir, "edges_deg")
+        deg = memo(spark, _artifact_key(sf_dir, "edges_deg"))
         if deg is not None:
             return deg.drop("srcdeg")
-    base = _pair_weights(spark, sf_dir).select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    )
-    from pyspark.sql import Window
 
-    edges = (
-        base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("src")
-        .sortWithinPartitions("src")
-    )
-    if with_degree:
-        # out-degree rides the SAME partitioning (partitionBy-only window
-        # over the already src-partitioned frame — no extra exchange), so
-        # a degree-weighted consumer needs neither a degree aggregate nor
-        # a second 117M-row join+checkpoint. Opt-in: LPA/BFS don't
-        # consume it and shouldn't pay the window. (No registered key
-        # requests it since the r13 pagerank bipartite rewrite; kept for
-        # the engine API and the edges_deg→edges reuse path above.)
-        edges = edges.withColumn(
-            "srcdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+    def build():
+        base = _pair_weights(spark, sf_dir).select(
+            F.col("c").alias("src"), F.col("s").alias("dst")
         )
-    edges = _ckpt(edges)
-    _shared_put(spark, sf_dir, variant, edges)
-    return edges
+        edges = (
+            base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .repartition("src")
+            .sortWithinPartitions("src")
+        )
+        if with_degree:
+            # out-degree rides the SAME partitioning (partitionBy-only
+            # window over the already src-partitioned frame — no extra
+            # exchange), so a degree-weighted consumer needs neither a
+            # degree aggregate nor a second 117M-row join+checkpoint.
+            # Opt-in: LPA/BFS don't consume it and shouldn't pay the
+            # window. (No registered key requests it since the r13
+            # pagerank bipartite rewrite; kept for the engine API and the
+            # edges_deg→edges reuse path above.)
+            edges = edges.withColumn(
+                "srcdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+            )
+        return _ckpt(edges)
+
+    return memo(spark, key, build)
 
 
 def _node_str(col):
@@ -460,13 +436,18 @@ def _contracted_copurchase(spark: SparkSession, sf_dir: str):
     form an internal clique (|H| >= 2 shared hours, the w>=2 denoise);
     redges = (ca, cb, ma, mb) rep pairs sharing >= 2 hours, ca < cb.
 
-    r11: memoized per session+corpus (_SHARED, fingerprinted on events —
-    triangle census, k-core and assortativity all consume the identical
-    contraction; in a sweep session the events scan + rep join now run
-    once for the three of them)."""
-    hit = _shared_get(spark, sf_dir, "contracted", table_name="events")
-    if hit is not None:
-        return hit
+    r11: memoized per session+corpus (catalog.memo, fingerprinted on
+    events — triangle census, k-core and assortativity all consume the
+    identical contraction; in a sweep session the events scan + rep join
+    now run once for the three of them)."""
+    return memo(
+        spark,
+        _artifact_key(sf_dir, "contracted", table_name="events"),
+        lambda: _build_contracted_copurchase(spark, sf_dir),
+    )
+
+
+def _build_contracted_copurchase(spark: SparkSession, sf_dir: str):
     purch = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -495,8 +476,8 @@ def _contracted_copurchase(spark: SparkSession, sf_dir: str):
         )
     )
     # one rep-level pass serves edge gen, degree agg, and the triple join.
-    # PLAIN localCheckpoint on purpose (r16 scope A/B,
-    # tools/probes/capture_scope_ab.py): these frames are rep-level
+    # PLAIN localCheckpoint on purpose (r16 scope A/B, commit
+    # 3e30739): these frames are rep-level
     # small, but their builds are joins where AQE's runtime re-planning
     # (runtime SMJ->BHJ on the rep-pair join, partition coalescing)
     # dominates — capture (AQE-off snap) regressed triangle 7.6->21.9 s
@@ -516,7 +497,6 @@ def _contracted_copurchase(spark: SparkSession, sf_dir: str):
         .select("ca", "cb", "ma", "mb")
     )
     redges = redges.localCheckpoint(eager=True)  # see groups note above
-    _shared_put(spark, sf_dir, "contracted", (groups, redges), table_name="events")
     return groups, redges
 
 
@@ -836,31 +816,27 @@ def _capped_purchase_edges(spark: SparkSession, sf_dir: str, k: int = _LPA_CAP) 
     rest of the family and the finished capped edge set is memoized per
     session+corpus; each cap window pays its own partition+sort (the
     shared artifact stays partition-neutral — see _pair_weights)."""
-    artifact = f"edges_capped_{k}"
-    hit = _shared_get(spark, sf_dir, artifact)
-    if hit is not None:
-        return hit
-    w = _pair_weights(spark, sf_dir)
-    wc = Window.partitionBy("c").orderBy(F.col("wt").desc(), F.col("s"))
-    ws = Window.partitionBy("s").orderBy(F.col("wt").desc(), F.col("c"))
-    fwd = (
-        w.withColumn("rk", F.row_number().over(wc))
-        .filter(F.col("rk") <= k)
-        .select(F.col("c").alias("src"), F.col("s").alias("dst"))
-    )
-    rev = (
-        w.withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= k)
-        .select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    # the two directions cannot collide (even->odd vs odd->even), so the
-    # union needs no distinct; src-partitioned like _purchase_edges so
-    # each vote round's join starts co-partitioned
-    capped = _ckpt(
-        fwd.union(rev).repartition("src").sortWithinPartitions("src")
-    )
-    _shared_put(spark, sf_dir, artifact, capped)
-    return capped
+
+    def build():
+        w = _pair_weights(spark, sf_dir)
+        wc = Window.partitionBy("c").orderBy(F.col("wt").desc(), F.col("s"))
+        ws = Window.partitionBy("s").orderBy(F.col("wt").desc(), F.col("c"))
+        fwd = (
+            w.withColumn("rk", F.row_number().over(wc))
+            .filter(F.col("rk") <= k)
+            .select(F.col("c").alias("src"), F.col("s").alias("dst"))
+        )
+        rev = (
+            w.withColumn("rk", F.row_number().over(ws))
+            .filter(F.col("rk") <= k)
+            .select(F.col("s").alias("src"), F.col("c").alias("dst"))
+        )
+        # the two directions cannot collide (even->odd vs odd->even), so
+        # the union needs no distinct; src-partitioned like
+        # _purchase_edges so each vote round's join starts co-partitioned
+        return _ckpt(fwd.union(rev).repartition("src").sortWithinPartitions("src"))
+
+    return memo(spark, _artifact_key(sf_dir, f"edges_capped_{k}"), build)
 
 
 def _lpa_oracle(rounds: int = 3, k: int = _LPA_CAP) -> str:
@@ -1028,9 +1004,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 60M-row join; standalone runs keep the original single-pass plan
     (this key reads the weight table once, so it must not pay a
     checkpoint write of its own — the degree_distribution rule)."""
-    w_shared = _shared_get(spark, sf_dir, "pair_weights") or _shared_get(
-        spark, sf_dir, "pair_weights_bkt"
-    )
+    w_shared = _shared_pair_weights(spark, sf_dir)
     if w_shared is not None:
         w = w_shared.select(
             F.shiftright("c", 1).alias("custkey"),
@@ -1135,11 +1109,9 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge checkpoint, read the pair set / degrees from it instead
     # (exact same rows — the bidirected set counts each pair from both
     # ends, so a plain per-src count over it IS the degree).
-    w_shared = _shared_get(spark, sf_dir, "pair_weights") or _shared_get(
-        spark, sf_dir, "pair_weights_bkt"
-    )
-    edges_shared = _shared_get(spark, sf_dir, "edges_deg") or _shared_get(
-        spark, sf_dir, "edges"
+    w_shared = _shared_pair_weights(spark, sf_dir)
+    edges_shared = memo(spark, _artifact_key(sf_dir, "edges_deg")) or memo(
+        spark, _artifact_key(sf_dir, "edges")
     )
     if w_shared is not None:
         base = w_shared.select(

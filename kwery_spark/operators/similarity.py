@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import round6, table
+from kwery_spark.catalog import memo, round6, table
 from kwery_spark.registry import register
 
 
@@ -62,7 +62,6 @@ def _vecs(spark: SparkSession, sf_dir: str, alias_v: str = "v") -> DataFrame:
 # across sessions); corpora with near-threshold clone structure should
 # pin ``spark.kwery.contract`` explicitly rather than rely on the gate.
 CONTRACT_MIN_CLONE = 2.0
-_CLONE_MEMO: dict[tuple, float] = {}
 
 
 def _clone_factor(spark: SparkSession, sf_dir: str) -> float:
@@ -72,24 +71,20 @@ def _clone_factor(spark: SparkSession, sf_dir: str) -> float:
     from kwery_spark.catalog import parquet_rows
     from kwery_spark.sources.scans import _corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        _corpus_fingerprint(sf_dir, "embeddings"),
-    )
-    hit = _CLONE_MEMO.get(key)
-    if hit is None:
-        rows = parquet_rows(sf_dir, "embeddings")
+    def build():
         nd = (
             _vecs(spark, sf_dir)
             .agg(F.approx_count_distinct(F.xxhash64("v")).alias("nd"))
             .first()[0]
         )
-        hit = rows / max(1, nd)
-        _CLONE_MEMO[key] = hit
-        while len(_CLONE_MEMO) > 8:
-            _CLONE_MEMO.pop(next(iter(_CLONE_MEMO)))
-    return hit
+        return parquet_rows(sf_dir, "embeddings") / max(1, nd)
+
+    key = (
+        "clone",
+        _os.path.realpath(sf_dir),
+        _corpus_fingerprint(sf_dir, "embeddings"),
+    )
+    return memo(spark, key, build)
 
 
 def _use_contraction(spark: SparkSession, sf_dir: str) -> bool:
@@ -103,12 +98,11 @@ def _use_contraction(spark: SparkSession, sf_dir: str) -> bool:
 
 # Memoized query vectors (r14): a k-NN query vector is a bounded 1-row
 # primary-key lookup (64 doubles) — the same sanctioned bounded-scalar
-# collect class as tpch._NATION_MEMO, keyed on (applicationId, corpus
+# collect class as tpch._nation_rows, memoized per (session, corpus
 # path, embeddings fingerprint) so a regenerated corpus or new session
 # can never be served a stale vector. The value is a tuple of floats,
 # never a DataFrame (the stage-skipping trap does not apply to
 # plan-time literals).
-_QVEC_MEMO: dict[tuple, tuple] = {}
 
 
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> tuple:
@@ -118,14 +112,7 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> tuple:
 
     from kwery_spark.sources.scans import _corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        _corpus_fingerprint(sf_dir, "embeddings"),
-        vec_id,
-    )
-    hit = _QVEC_MEMO.get(key)
-    if hit is None:
+    def build():
         rows = (
             _vecs(spark, sf_dir)
             .filter(F.col("vec_id") == vec_id)
@@ -137,11 +124,15 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> tuple:
                 f"_query_vec: no embedding with vec_id={vec_id} in "
                 f"{sf_dir}/embeddings.parquet — corpus layout drift?"
             )
-        hit = tuple(float(x) for x in rows[0].v)
-        _QVEC_MEMO[key] = hit
-        while len(_QVEC_MEMO) > 8:
-            _QVEC_MEMO.pop(next(iter(_QVEC_MEMO)))
-    return hit
+        return tuple(float(x) for x in rows[0].v)
+
+    key = (
+        "qvec",
+        _os.path.realpath(sf_dir),
+        _corpus_fingerprint(sf_dir, "embeddings"),
+        vec_id,
+    )
+    return memo(spark, key, build)
 
 
 def dot(a, b):

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from kwery_spark.catalog import round6, table
+from kwery_spark.catalog import memo, round6, table
 from kwery_spark.registry import register
 
 
@@ -33,9 +33,6 @@ def _tokens(df: DataFrame):
 # original corpus (sf0.001-0.1, clone ~1.0) the gate keeps the raw arm,
 # so driver oracle samples grade the raw plans and .data/sfN checks
 # grade the contracted ones.
-_TEXT_CLONE_MEMO: dict[tuple, float] = {}
-
-
 def _text_clone_factor(spark: SparkSession, sf_dir: str) -> float:
     """documents rows / approx-distinct(text), >= 1.0."""
     import os as _os
@@ -43,24 +40,20 @@ def _text_clone_factor(spark: SparkSession, sf_dir: str) -> float:
     from kwery_spark.catalog import parquet_rows
     from kwery_spark.sources.scans import _corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.realpath(sf_dir),
-        _corpus_fingerprint(sf_dir, "documents"),
-    )
-    hit = _TEXT_CLONE_MEMO.get(key)
-    if hit is None:
-        rows = parquet_rows(sf_dir, "documents")
+    def build():
         nd = (
             table(spark, sf_dir, "documents")
             .agg(F.approx_count_distinct(F.xxhash64("text")).alias("nd"))
             .first()[0]
         )
-        hit = rows / max(1, nd)
-        _TEXT_CLONE_MEMO[key] = hit
-        while len(_TEXT_CLONE_MEMO) > 8:
-            _TEXT_CLONE_MEMO.pop(next(iter(_TEXT_CLONE_MEMO)))
-    return hit
+        return parquet_rows(sf_dir, "documents") / max(1, nd)
+
+    key = (
+        "text_clone",
+        _os.path.realpath(sf_dir),
+        _corpus_fingerprint(sf_dir, "documents"),
+    )
+    return memo(spark, key, build)
 
 
 def _use_text_contraction(spark: SparkSession, sf_dir: str) -> bool:
@@ -74,19 +67,17 @@ def _use_text_contraction(spark: SparkSession, sf_dir: str) -> bool:
     return _text_clone_factor(spark, sf_dir) >= CONTRACT_MIN_CLONE
 
 
-_CONTRACTED_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _contracted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-text frame with multiplicity ``m``, eagerly checkpointed:
     |distinct texts| rows, partitioned by text — downstream
     groupBy(text, ...) consumers ride this partitioning exchange-free
     (HashPartitioning(text) satisfies any clustering it prefixes).
 
-    r16 (ADVICE r15): memoized per (applicationId, corpus, fingerprint)
-    like _TEXT_CLONE_MEMO / graph._SHARED — a sweep session running
-    text_tfidf, text_rake_keywords and text_pmi_cooccurrence previously
-    paid the corpus-wide text shuffle once per key. The doc_id list
+    r16 (ADVICE r15): memoized per (session, corpus, fingerprint) in
+    catalog.memo, like the clone factor and the graph artifacts — a
+    sweep session running text_tfidf, text_rake_keywords and
+    text_pmi_cooccurrence previously paid the corpus-wide text shuffle
+    once per key. The doc_id list
     variant is gone (tfidf's r16 join-back re-expansion), so all three
     consumers share ONE memo entry. Hit==cold equality locked in
     test_r16_ops."""
@@ -95,30 +86,26 @@ def _contracted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kwery_spark.sources.scans import _corpus_fingerprint
 
     key = (
-        spark.sparkContext.applicationId,
+        "contracted_docs",
         _os.path.realpath(sf_dir),
         _corpus_fingerprint(sf_dir, "documents"),
     )
-    hit = _CONTRACTED_MEMO.get(key)
-    if hit is not None:
-        return hit
-    docs = table(spark, sf_dir, "documents")
     # PLAIN localCheckpoint on purpose (r16): capture (catalog.lckpt,
     # the AQE-off snap) was tried here and REGRESSED the trio — tfidf
     # 3.29->3.68 s, rake 1.69->3.77 s, pmi 3.52->4.42 s at sf10
-    # (tools/probes/capture_scope_ab.py) — the contracted frame is
-    # |distinct texts| small, so the re-exchange it saves downstream is
-    # cheaper than what the corpus-wide groupBy(text) build loses
-    # without AQE. The "consumers ride this partitioning exchange-free"
+    # (commit 3e30739) — the contracted frame is |distinct texts| small,
+    # so the re-exchange it saves downstream is cheaper than what the
+    # corpus-wide groupBy(text) build loses without AQE. The "consumers ride this partitioning exchange-free"
     # wording in older notes was fiction under AQE either way
     # (UnknownPartitioning — see catalog.snap_captured).
-    out = docs.groupBy("text").agg(F.count(F.lit(1)).alias("m")).localCheckpoint(
-        eager=True
+    return memo(
+        spark,
+        key,
+        lambda: table(spark, sf_dir, "documents")
+        .groupBy("text")
+        .agg(F.count(F.lit(1)).alias("m"))
+        .localCheckpoint(eager=True),
     )
-    _CONTRACTED_MEMO[key] = out
-    while len(_CONTRACTED_MEMO) > 4:
-        _CONTRACTED_MEMO.pop(next(iter(_CONTRACTED_MEMO)))
-    return out
 
 
 @register(

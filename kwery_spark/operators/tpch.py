@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import broadcast
 
-from kwery_spark.catalog import bucketed_db, bucketed_table, cbo_active, stats_db, table
+from kwery_spark.catalog import bucketed_db, bucketed_table, cbo_active, memo, stats_db, table
 from kwery_spark.registry import register
 
 
@@ -36,13 +36,11 @@ def _bucketed(spark: SparkSession, sf_dir: str) -> str | None:
 # the r7-sanctioned bounded-scalar collect (25-row spec-constant table),
 # but re-collecting it on every query build costs 2-3 driver jobs —
 # ~0.2 s of the ~1.0 s sf10 q5 run was asia_keys + the nation/region
-# footer reads (job census: 9 jobs/run, 3 of them this). Same memo
-# discipline as graph._SHARED: keyed on (applicationId, resolved corpus,
-# nation+region file fingerprints) so a regenerated corpus or a new
-# session can never be served a stale list; the value is ≤25 ints, never
-# a DataFrame (the stage-skipping trap does not apply to plan-time
-# literals).
-_NATION_MEMO: dict[tuple, tuple] = {}
+# footer reads (job census: 9 jobs/run, 3 of them this). Memoized in
+# catalog.memo per (session, resolved corpus, nation+region file
+# fingerprints) so a regenerated corpus or a new session can never be
+# served a stale list; the value is ≤25 ints, never a DataFrame (the
+# stage-skipping trap does not apply to plan-time literals).
 
 
 def _nation_rows(spark: SparkSession, sf_dir: str) -> list:
@@ -53,17 +51,7 @@ def _nation_rows(spark: SparkSession, sf_dir: str) -> list:
 
     from kwery_spark.sources.scans import _corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(sf_dir),
-        # BOTH source files: the memoized value includes the ASIA region
-        # keys collected from region, so a region-file change with an
-        # unchanged nation fingerprint must also miss (ADVICE r12)
-        _corpus_fingerprint(sf_dir, "nation"),
-        _corpus_fingerprint(sf_dir, "region"),
-    )
-    hit = _NATION_MEMO.get(key)
-    if hit is None:
+    def build():
         rows = tuple(
             sorted(
                 (r.n_nationkey, r.n_name, r.n_regionkey)
@@ -81,11 +69,18 @@ def _nation_rows(spark: SparkSession, sf_dir: str) -> list:
                 .collect()
             )
         )
-        hit = (rows, asia)
-        _NATION_MEMO[key] = hit
-        while len(_NATION_MEMO) > 8:
-            _NATION_MEMO.pop(next(iter(_NATION_MEMO)))
-    return hit
+        return rows, asia
+
+    key = (
+        "nation",
+        os.path.realpath(sf_dir),
+        # BOTH source files: the memoized value includes the ASIA region
+        # keys collected from region, so a region-file change with an
+        # unchanged nation fingerprint must also miss (ADVICE r12)
+        _corpus_fingerprint(sf_dir, "nation"),
+        _corpus_fingerprint(sf_dir, "region"),
+    )
+    return memo(spark, key, build)
 
 
 def _asia_nation_keys(spark: SparkSession, sf_dir: str) -> list[int]:

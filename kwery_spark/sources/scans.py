@@ -18,9 +18,13 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from kwery_spark.catalog import round6, table
 from kwery_spark.registry import register
 
-# Local scratch for sink round-trips; at cluster scale this would be an
-# object-store path. Kept inside the repo (gitignored) per sandbox rules.
-SCRATCH = "/root/repo/.scratch"
+# Local scratch for sink round-trips, layouts and checkpoints; at cluster
+# scale this would be an object-store path. Kept in the checkout root
+# next to the package (gitignored), wherever the checkout lives.
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch",
+)
 
 
 def _scratch(*parts: str) -> str:

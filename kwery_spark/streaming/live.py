@@ -21,9 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from kwery_spark.catalog import _normalize_ts
 from kwery_spark.registry import register
+from kwery_spark.sources import scans
 from kwery_spark.sources.scans import _corpus_fingerprint
 
-SCRATCH = "/root/repo/.scratch/streaming"
+SCRATCH = os.path.join(scans.SCRATCH, "streaming")
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,6 +1,6 @@
-"""Round-11 invariants: the graph family's session-scoped shared-artifact
-cache (kwery_spark/operators/graph.py _SHARED) and the dedup_minhash
-summary contract."""
+"""Round-11 invariants: the graph family's session-scoped shared artifacts
+(kind "graph" of kwery_spark.catalog.memo) and the dedup_minhash summary
+contract."""
 
 import pytest
 
@@ -14,9 +14,9 @@ def sf001():
 
 
 def _clear_shared():
-    from kwery_spark.operators import graph
+    from kwery_spark.catalog import memo_clear
 
-    graph._SHARED.clear()
+    memo_clear()
 
 
 def test_graph_shared_cache_hit_equals_cold(spark, sf001):
@@ -50,26 +50,22 @@ def test_graph_shared_cache_is_corpus_keyed(spark, sf001):
     # ADVICE r14: the artifact name carries the effective arm (raw vs
     # bucketed zipper) — a session whose warehouse has the sf0.001
     # bucketed layout (built by the r14 zipper test) memoizes the _bkt name
-    assert (
-        graph._shared_get(spark, sf001, "pair_weights") is not None
-        or graph._shared_get(spark, sf001, "pair_weights_bkt") is not None
-    )
-    assert graph._shared_get(spark, "/root/testdata/sf0.01", "pair_weights") is None
-    assert (
-        graph._shared_get(spark, "/root/testdata/sf0.01", "pair_weights_bkt") is None
-    )
+    assert graph._shared_pair_weights(spark, sf001) is not None
+    assert graph._shared_pair_weights(spark, "/root/testdata/sf0.01") is None
     _clear_shared()
 
 
 def test_graph_shared_cache_bounded(spark, sf001):
     """The LRU cap must hold no matter how many artifacts a session
     touches (evicted entries release their checkpoint refs)."""
+    from kwery_spark import catalog
     from kwery_spark.operators import graph
 
     _clear_shared()
-    for i in range(graph._SHARED_CAP + 5):
-        graph._shared_put(spark, sf001, f"fake_{i}", object())
-    assert len(graph._SHARED) == graph._SHARED_CAP
+    cap = catalog._MEMO_CAPS["graph"]
+    for i in range(cap + 5):
+        catalog.memo(spark, graph._artifact_key(sf001, f"fake_{i}"), object)
+    assert len(catalog._MEMO["graph"]) == cap
     _clear_shared()
 
 

@@ -108,16 +108,16 @@ def test_pair_weights_bucketed_zipper_value_identical(spark):
     exists (exchange-free join feed, sf30 build 58.7 -> 42.1 s) — the
     rows must be IDENTICAL to the raw-scan arm, and the kill switch
     must force the raw arm."""
-    from kwery_spark.catalog import build_bucketed
+    from kwery_spark.catalog import build_bucketed, memo_clear
     from kwery_spark.operators import graph
 
     build_bucketed(spark, SF001)  # idempotent; seconds at sf0.001
-    graph._SHARED.clear()
+    memo_clear()
     try:
         bucketed = sorted(
             map(tuple, graph._pair_weights(spark, SF001).collect())
         )
-        graph._SHARED.clear()
+        memo_clear()
         spark.conf.set("spark.kwery.bucketed", "false")
         try:
             raw = sorted(map(tuple, graph._pair_weights(spark, SF001).collect()))
@@ -125,7 +125,7 @@ def test_pair_weights_bucketed_zipper_value_identical(spark):
             spark.conf.unset("spark.kwery.bucketed")
         assert bucketed == raw and len(raw) > 0
     finally:
-        graph._SHARED.clear()
+        memo_clear()
 
 
 def test_purchase_edges_degree_variant_correct(spark):
@@ -137,9 +137,10 @@ def test_purchase_edges_degree_variant_correct(spark):
     column without changing the edge set."""
     from pyspark.sql import functions as F
 
+    from kwery_spark.catalog import memo_clear
     from kwery_spark.operators import graph
 
-    graph._SHARED.clear()
+    memo_clear()
     try:
         deg = graph._purchase_edges(spark, SF001, with_degree=True)
         w = graph._pair_weights(spark, SF001).select("c", "s")
@@ -162,7 +163,7 @@ def test_purchase_edges_degree_variant_correct(spark):
             (s, d) for (s, d, _n) in expect
         }
     finally:
-        graph._SHARED.clear()
+        memo_clear()
 
 
 def test_query_vec_matches_collect_and_plan_is_joinless(spark):

@@ -50,19 +50,20 @@ def test_q18_limit_below_customer_join(spark):
 
 
 def test_contracted_docs_memo_hit_equals_cold(spark):
-    """r16: _contracted_docs is memoized per (applicationId, corpus,
+    """r16: _contracted_docs is memoized per (session, corpus,
     fingerprint). The memo hit must be the same frame (no rebuild) and
-    its rows must equal a forced cold build — the graph._SHARED equality
-    doctrine."""
-    from kwery_spark.operators.text import _CONTRACTED_MEMO, _contracted_docs
+    its rows must equal a forced cold build — the graph artifacts'
+    equality doctrine."""
+    from kwery_spark.catalog import _MEMO, memo_clear
+    from kwery_spark.operators.text import _contracted_docs
 
-    _CONTRACTED_MEMO.clear()
+    memo_clear()
     cold = _contracted_docs(spark, SF001)
-    assert len(_CONTRACTED_MEMO) == 1
+    assert len(_MEMO["contracted_docs"]) == 1
     hit = _contracted_docs(spark, SF001)
     assert hit is cold  # memo returned the same checkpointed frame
     cold_rows = sorted(map(tuple, cold.collect()))
-    _CONTRACTED_MEMO.clear()
+    memo_clear()
     rebuilt = sorted(map(tuple, _contracted_docs(spark, SF001).collect()))
     assert cold_rows == rebuilt and len(rebuilt) > 0
 
@@ -90,6 +91,30 @@ def test_tfidf_contracted_reexpansion_bounded(spark):
         spark.conf.set("spark.kwery.contract", "auto")
     assert contracted == raw and len(raw) > 0
 
+
+def _suppkey_counts(spark):
+    """A fresh AQE-flexible shuffle output: groupBy over repartition(col)."""
+    import pyspark.sql.functions as F
+
+    from kwery_spark.catalog import table
+
+    return (
+        table(spark, SF001, "lineitem")
+        .select("l_suppkey")
+        .repartition("l_suppkey")
+        .groupBy("l_suppkey")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _same_key_consumer_plan(d):
+    import pyspark.sql.functions as F
+
+    from kwery_spark.plans.inspect import formatted_plan
+
+    return formatted_plan(d.groupBy("l_suppkey").agg(F.sum("n").alias("s")))
+
+
 def test_lckpt_captures_partitioning_under_aqe(spark):
     """r16 capture fix (catalog.snap_captured): with AQE on — the graded
     session state at sf10+/sweeps — a localCheckpoint of an AQE-flexible
@@ -101,44 +126,63 @@ def test_lckpt_captures_partitioning_under_aqe(spark):
     the plain arm pins coalescing off for its snap only, so the tiny
     test frame keeps >1 partition (a 1-partition frame satisfies any
     distribution and would hide the defect)."""
-    import pyspark.sql.functions as F
-
-    from kwery_spark.catalog import lckpt, table
-    from kwery_spark.plans.inspect import formatted_plan
+    from kwery_spark.catalog import lckpt
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
-    def fresh_base():
-        return (
-            table(spark, SF001, "lineitem")
-            .select("l_suppkey")
-            .repartition("l_suppkey")
-            .groupBy("l_suppkey")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-
-    def consumer_plan(d):
-        return formatted_plan(d.groupBy("l_suppkey").agg(F.sum("n").alias("s")))
-
-    captured = lckpt(fresh_base())
-    assert consumer_plan(captured).count("Exchange") == 0, consumer_plan(captured)
+    captured = lckpt(_suppkey_counts(spark))
+    plan = _same_key_consumer_plan(captured)
+    assert plan.count("Exchange") == 0, plan
 
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
-        plain = fresh_base().localCheckpoint(eager=True)
+        plain = _suppkey_counts(spark).localCheckpoint(eager=True)
         assert plain.rdd.getNumPartitions() > 1
-        assert consumer_plan(plain).count("Exchange") >= 1, consumer_plan(plain)
-        # the kill switch restores the old (uncaptured) behavior for A/B
-        spark.conf.set("spark.kwery.ckpt.capture", "false")
-        try:
-            uncaptured = lckpt(fresh_base())
-            assert consumer_plan(uncaptured).count("Exchange") >= 1
-        finally:
-            spark.conf.set("spark.kwery.ckpt.capture", "true")
+        plan = _same_key_consumer_plan(plain)
+        assert plan.count("Exchange") >= 1, plan
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     # AQE conf is restored after every snap
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_lckpt_concurrent_callers_keep_capture_and_conf(spark):
+    """VERDICT r16 #3: snap_captured flips the session-wide
+    spark.sql.adaptive.enabled. Eight threads snapping at once must each
+    still capture the partitioning (their snap ran with AQE off), and the
+    conf must read "true" afterwards (no thread restored another's
+    "false"). Starts are staggered a few ms apart: threads released in
+    lockstep would all read "true" before any flip and hide the race."""
+    import threading
+    import time
+
+    from kwery_spark.catalog import lckpt
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    n = 8
+    start = threading.Barrier(n)
+    plans: list = [None] * n
+    errors: list = []
+
+    def worker(i):
+        try:
+            base = _suppkey_counts(spark)
+            start.wait()
+            time.sleep(0.02 * i)
+            plans[i] = _same_key_consumer_plan(lckpt(base))
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    for plan in plans:
+        assert plan.count("Exchange") == 0, plan
 
 
 def test_profile_table_no_expand(spark):
