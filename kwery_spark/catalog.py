@@ -212,7 +212,7 @@ def snap_captured(df: DataFrame, snap):
     and outputOrdering (r16). Under AQE, ``Dataset.checkpoint`` AND
     ``localCheckpoint`` both record ``UnknownPartitioning(0)`` and no
     ordering in Spark 4.1.2 — the capture reads AdaptiveSparkPlanExec's
-    pre-execution partitioning (probe tools/probes/ckpt_partitioning.py)
+    pre-execution partitioning (probe tools/probes/ckpt_partitioning.py@d7daee1)
     — so every "exchange-free consumer of the checkpoint" design in the
     graph and text families was silently paying a full re-exchange
     wherever sessions run AQE-on (sf10+ bench sections, all sweeps).
@@ -563,9 +563,9 @@ def analyze_tables(spark: SparkSession, sf_dir: str) -> str:
     # different physical paths + stats); the name embeds the corpus
     # fingerprint so regenerated testdata invalidates schemas + stats
     db = _db_name(sf_dir, optimized=opt is not None)
-    # warm-start fast path: if the LAST table of the loop already carries
-    # row stats, a prior run completed — skip the per-table checks
-    # (~1 s of metastore round-trips per table otherwise)
+    # repeat-call fast path: if the LAST table of the loop already carries
+    # row stats, an earlier call in this SparkContext completed — skip the
+    # per-table checks (~1 s of catalog round-trips per table otherwise)
     try:
         last = f"{db}.{TABLES[-1]}"
         # tableExists first: probing DESCRIBE on a missing table raises an
@@ -590,11 +590,10 @@ def analyze_tables(spark: SparkSession, sf_dir: str) -> str:
                     full, path=os.path.join(data_dir, f"{name}.parquet"), source="parquet"
                 )
             elif _has_row_stats(spark, full):
-                # already analyzed (the metastore persists across sessions)
-                # — skip the re-scan. Stats go stale only if the testdata
-                # corpus is regenerated in place; drop the kwery_* db to
-                # force a re-ANALYZE in that case. Stale stats can only
-                # mis-cost a plan, never change results.
+                # already analyzed by an earlier call in this SparkContext
+                # (the catalog is in-memory: a new context re-ANALYZEs)
+                # — skip the re-scan. Stale stats can only mis-cost a
+                # plan, never change results.
                 continue
             # column stats support atomic types only (ANALYZE rejects
             # array<float> embeddings); nested columns still get table
@@ -640,19 +639,19 @@ def _has_row_stats(spark: SparkSession, full: str) -> bool:
 
 def stats_db(spark: SparkSession, sf_dir: str) -> str | None:
     """Name of the ANALYZEd catalog database for ``sf_dir`` if one exists
-    (i.e. ``analyze_tables`` ran, this session or a prior one — the
-    embedded metastore persists), else None. When this process runs on
-    an optimized layout, only the optimized-layout db is eligible (a raw
-    db's stats describe other files)."""
+    (i.e. ``analyze_tables`` ran in this SparkContext — the catalog is
+    in-memory, so a new context starts with none), else None. When this
+    process runs on an optimized layout, only the optimized-layout db is
+    eligible (a raw db's stats describe other files)."""
     try:
         # _db_name fingerprints the corpus via os.stat — a missing or
         # renamed corpus file must mean "no stats db", not an OSError
         # escaping a probe that is documented to be safe (ADVICE r3)
         db = _db_name(sf_dir, optimized=sf_dir in _OPTIMIZED)
         # memoize POSITIVE probes only (r12): tableExists is a py4j
-        # metastore round trip paid on every query BUILD (~10-40 ms, two
+        # catalog round trip paid on every query BUILD (~10-40 ms, two
         # probes per CBO-path query); a db that exists stays valid for
-        # the session (fingerprint-named, stale siblings are dropped
+        # the session (fingerprint-named, stale siblings are removed
         # before builds, never mid-session). A negative (None) is not
         # stored, so the prep step can still flip it.
         return memo(
@@ -717,13 +716,27 @@ def _bucketed_db_name(sf_dir: str) -> str:
 def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
     """Write orders + lineitem as managed bucketed tables (hash(orderkey)
     into N buckets, one file per bucket, sorted within) and ANALYZE them.
-    Idempotent across processes: the db name embeds the corpus
-    fingerprint, so a regenerated corpus is never served stale buckets,
-    and a completed build is detected via row stats on the last table.
-    Stale fingerprint siblings for the same corpus basename are dropped
-    CASCADE first — unlike stats-only dbs these hold real data copies."""
+    Idempotent within a SparkContext: a completed build is detected via
+    row stats on the last table. The catalog is in-memory, so a new
+    context re-registers and rewrites the tables; the db name embeds the
+    corpus fingerprint, so a regenerated corpus is never served stale
+    buckets. Every call first removes stale fingerprint siblings for the
+    same corpus basename from the warehouse directory — unlike stats-only
+    dbs they hold real data copies, and another context's databases are
+    never in this context's catalog to drop."""
     db = _bucketed_db_name(sf_dir)
     base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    # the conf echoes back as file:///path or file:/path depending on
+    # who resolved it — normalize both to a plain filesystem path
+    wh = spark.conf.get("spark.sql.warehouse.dir", "")
+    wh = wh.removeprefix("file://").removeprefix("file:")
+    # database dirs carry Spark's lower-cased db name
+    db_dir = f"{db}.db".lower()
+    stale = f"kwery_bkt_{base}_".lower()
+    if wh and os.path.isdir(wh):
+        for old in os.listdir(wh):
+            if old.startswith(stale) and old != db_dir:
+                shutil.rmtree(os.path.join(wh, old), ignore_errors=True)
     try:
         if spark.catalog.tableExists(f"{db}.lineitem") and _has_row_stats(
             spark, f"{db}.lineitem"
@@ -731,9 +744,6 @@ def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
             return db
     except Exception:
         pass
-    for old in [d.name for d in spark.catalog.listDatabases()]:
-        if old.startswith(f"kwery_bkt_{base}_") and old != db:
-            spark.sql(f"DROP DATABASE IF EXISTS {old} CASCADE")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     # Bucket count scales with the corpus exactly like shuffle
     # parallelism (bench.py _prep): at sf<=1 the default 8 avoids empty
@@ -748,15 +758,12 @@ def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
         if spark.catalog.tableExists(full) and _has_row_stats(spark, full):
             continue
         spark.sql(f"DROP TABLE IF EXISTS {full}")
-        # a build that died between location-create and metastore-commit
-        # leaves an orphaned dir DROP TABLE can't see — clear it, or the
-        # managed-table write refuses with LOCATION_ALREADY_EXISTS
-        wh = spark.conf.get("spark.sql.warehouse.dir", "")
-        # the conf echoes back as file:///path or file:/path depending on
-        # who resolved it — normalize both to a plain filesystem path
-        wh = wh.removeprefix("file://").removeprefix("file:")
+        # an earlier SparkContext's build (the in-memory catalog forgets
+        # it) or a build that died mid-write leaves a table dir DROP
+        # TABLE can't see — clear it, or the managed-table write refuses
+        # with LOCATION_ALREADY_EXISTS
         if wh:
-            shutil.rmtree(os.path.join(wh, f"{db}.db", name), ignore_errors=True)
+            shutil.rmtree(os.path.join(wh, db_dir, name), ignore_errors=True)
         (
             table(spark, sf_dir, name)
             # pre-partition on the bucket hash so each task owns exactly
@@ -785,8 +792,8 @@ def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
 
 def bucketed_db(spark: SparkSession, sf_dir: str) -> str | None:
     """Name of the bucketed-layout database for ``sf_dir`` if a completed
-    build exists (this session or a prior one — the metastore and
-    warehouse persist), else None. Same probe discipline as stats_db:
+    build exists in this SparkContext's in-memory catalog, else None.
+    Same probe discipline as stats_db:
     never raises on a missing corpus."""
     try:
         db = _bucketed_db_name(sf_dir)
@@ -808,70 +815,9 @@ def bucketed_db(spark: SparkSession, sf_dir: str) -> str | None:
 
 def bucketed_table(spark: SparkSession, db: str, name: str) -> DataFrame:
     """``spark.table(f"{db}.{name}")`` through the scan-plan memo: the
-    raw call resolves through the metastore on EVERY query build
-    (~20-40 ms of py4j+HMS per table, two tables per bucketed fact
+    raw call resolves through the catalog on EVERY query build
+    (~20-40 ms of py4j+catalog per table, two tables per bucketed fact
     query). A catalog-table DataFrame is an immutable scan plan like
     the parquet reads table() caches — no shuffle to stage-skip."""
     return memo(spark, ("scan", db, name), lambda: spark.table(f"{db}.{name}"))
 
-
-def cache_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Storage-parity prep (bench only): materialize every corpus table
-    into Spark's in-memory columnar cache, the engine-native storage
-    format — the exact counterpart of the DuckDB baseline's untimed
-    native-table load (bench.py _measure_duckdb prep_tables=True, ADVICE
-    r4). After this, BOTH engines answer timed queries from their own
-    in-memory columnar representation; per-run scan, decode of cached
-    batches, expression evaluation, joins and aggregation all remain
-    inside the timed region. Nothing query-specific is precomputed —
-    this is a storage-layer residency decision, not result reuse (the
-    stage-skipping trap documented in registry.py is about SHUFFLE
-    output reuse and still applies untouched: every timed run re-executes
-    all stages).
-
-    At 100 TB the same lever is tiered storage / OS page cache /
-    executor-local SSD cache (Databricks delta cache, Presto Alluxio):
-    hot tables served from memory-speed storage while cold data stays
-    on object storage. MEMORY_AND_DISK semantics make oversubscription
-    safe — partitions that don't fit spill, they don't OOM.
-
-    Caches the plan objects catalog.table() hands out (so every query
-    routed through the catalog hits the InMemoryRelation) plus the
-    bucketed tables if built.
-
-    MEASURED NEGATIVE at sf3 (fresh JVM, tools/bench_conf.py
-    spark.kwery.cacheTables=true, 2026-08-14): headline total 8.05 s
-    cached vs 5.76 s reading parquet — q5 0.83→1.98 s, win_row_number
-    0.92→1.61 s. Spark's vectorized parquet reader out-scans its own
-    in-memory cache format here, and the InMemoryRelation breaks the
-    bucketed tables' reported partitioning, reintroducing the fact-join
-    exchange. So bench.py does NOT use this prep; it exists as the
-    capability (tiered-storage residency) and as the recorded
-    experiment. The DuckDB-native-table baseline prep stands on its own
-    as parity for optimize_layout+ANALYZE+bucketing, all of which are
-    also offline storage/catalog prep."""
-    for name in TABLES:
-        df = table(spark, sf_dir, name)
-        df.cache()
-        df.count()  # materialize outside the timed region
-    bdb = bucketed_db(spark, sf_dir)
-    if bdb is not None:
-        for name in _BUCKETED_TABLES:
-            spark.catalog.cacheTable(f"{bdb}.{name}")
-            spark.table(f"{bdb}.{name}").count()
-
-
-def uncache_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Release cache_tables state (bench moves between scale factors)."""
-    for name in TABLES:
-        try:
-            table(spark, sf_dir, name).unpersist()
-        except Exception:
-            pass
-    bdb = bucketed_db(spark, sf_dir)
-    if bdb is not None:
-        for name in _BUCKETED_TABLES:
-            try:
-                spark.catalog.uncacheTable(f"{bdb}.{name}")
-            except Exception:
-                pass

@@ -346,7 +346,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact) vanishes from this key — pagerank now runs straight off
     the family's shared _pair_weights checkpoint. BFS still builds the
     plain edge frame for itself (it genuinely walks both directions).
-    Decomposition at sf30 (tools/decompose_pagerank.py, fresh JVM, 64
+    Decomposition at sf30 (tools/decompose_pagerank.py@d7daee1, fresh JVM, 64
     partitions): _pair_weights build+ckpt 68.7 s (the shared family
     cost every first graph key pays) + degc/degs ckpts 6.7/5.8 s +
     rounds 20.3/19.7/16.8 s (honest ~19 s/round linear work over 59M

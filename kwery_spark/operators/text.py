@@ -165,7 +165,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     contracted arm shuffles the corpus ONCE (groupBy(text) for
     multiplicities); tf/df/score/window all run on the
     |distinct texts|-sized checkpoint. Fresh-session A/B at sf10
-    (tools/probes/text_contract_decomp.py): 20.06 -> 3.41 s (-83%), all
+    (tools/probes/text_contract_decomp.py@d7daee1): 20.06 -> 3.41 s (-83%), all
     500k output rows identical. Raw arm unchanged — on a mostly-distinct
     corpus the text-keyed shuffle + re-expansion buys nothing
     (similarity.py gate doctrine, threshold 2.0).
@@ -922,7 +922,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|docs| rows x 5 ints, tiny), and n_docs/avgdl/df all come from one
     1-row aggregate over that checkpoint (broadcast). Scoring is then a
     map-side expression; top-20 fuses to TakeOrderedAndProject.
-    Measured fresh-JVM at sf3 (tools/probes/bm25_decomp.py): full key
+    Measured fresh-JVM at sf3 (tools/probes/bm25_decomp.py@d7daee1): full key
     2.73 -> 1.70 s, 10 jobs -> 5; values identical (probe asserts).
     Alternatives measured and rejected: length/replace token-count
     arithmetic (no split at all) 3.2 s — four replace passes over the
@@ -1061,7 +1061,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_use_text_contraction``), the scan side additionally contracts
     to distinct texts first — the regex split runs once per distinct
     text, weighted by multiplicity. Fresh-session A/B at sf10
-    (tools/probes/text_contract_decomp.py): 38.8 s (old two-pass) →
+    (tools/probes/text_contract_decomp.py@d7daee1): 38.8 s (old two-pass) →
     6.09 s (phrase contraction) → 1.48 s (with text contraction), top-15
     identical on all three arms. The word table stays vocabulary-sized
     (AQE broadcasts it); nothing quadratic, no Python on the data path."""
@@ -1178,7 +1178,7 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles the corpus once (groupBy(text)); the (text, word) distinct
     rides the checkpoint partitioning exchange-free, and the pair
     self-join blocks on text over |distinct texts| rows. Fresh-session
-    A/B at sf10 (tools/probes/text_contract_decomp.py): 19.75 →
+    A/B at sf10 (tools/probes/text_contract_decomp.py@d7daee1): 19.75 →
     2.92 s (-85%), top-30 identical. Raw arm unchanged below the gate."""
     docs = table(spark, sf_dir, "documents")
     if _use_text_contraction(spark, sf_dir):

@@ -24,9 +24,9 @@ def _bucketed(spark: SparkSession, sf_dir: str) -> str | None:
     falls through to the stats/hand plans over raw files."""
     if not cbo_active(spark):
         return None
-    # experiment kill-switch (tools/bench_conf.py A/B runs):
-    # spark.kwery.bucketed=false measures the stats/hand plans with the
-    # bucketed build present but unused
+    # experiment kill-switch for A/B runs (tools/ab.py --prep
+    # nobkt:spark.kwery.bucketed=false): measures the stats/hand plans
+    # with the bucketed build present but unused
     if (spark.conf.get("spark.kwery.bucketed", "true") or "").lower() == "false":
         return None
     return bucketed_db(spark, sf_dir)

@@ -18,9 +18,11 @@ from pyspark.sql import SparkSession
 # empty 1-row tasks.
 _LOCAL_SHUFFLE_PARTITIONS = "8"
 
-# Repo root — warehouse + Derby metastore are pinned here so catalog
-# state is (a) persistent across sessions and (b) never written outside
-# the repo, regardless of the caller's working directory.
+# Repo root — the warehouse (managed tables such as the bucketed layout,
+# catalog.build_bucketed) is pinned here so it is never written outside
+# the repo, regardless of the caller's working directory. The catalog
+# itself is Spark's in-memory one: its databases and table entries live
+# only as long as the SparkContext.
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -47,7 +49,7 @@ def _sweep_scratch_once() -> None:
 def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSession.Builder:
     _sweep_scratch_once()
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -85,7 +87,7 @@ def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSess
         # side is provably small regardless of SF (region/nation: fixed 5/25
         # rows) and rely on AQE elsewhere.
         .config("spark.sql.session.timeZone", "UTC")
-        # local[32] runs driver + all 32 executor threads in ONE heap;
+        # local[N] runs driver + all N executor threads in ONE heap;
         # 16g sizes it for the sf10 bench decade (60M-row lineitem, 24 MB
         # broadcast builds) — r6: with 8g the multi-scale bench session
         # slowed q5's sf10 section 2.3x through GC pressure alone.
@@ -93,15 +95,6 @@ def builder(app_name: str = "kwery-spark", cpus: int | None = None) -> SparkSess
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.warehouse.dir", f"file://{_REPO_ROOT}/spark-warehouse")
-        # Pin the Derby metastore into the repo via the JDO URL, NOT via
-        # spark.driver.extraJavaOptions -Dderby.system.home: overriding
-        # extraJavaOptions clobbers pyspark's default JVM flags (incl.
-        # --add-modules=jdk.incubator.vector) and costs a measured ~25%
-        # across the whole bench when the SIMD paths fall back to scalar.
-        .config(
-            "spark.hadoop.javax.jdo.option.ConnectionURL",
-            f"jdbc:derby:;databaseName={_REPO_ROOT}/metastore_db;create=true",
-        )
     )
 
 

@@ -1,10 +1,11 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kwery_spark.session import get_spark
 
@@ -14,7 +15,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("kwery-tests", cpus=8)
+    s = get_spark("kwery-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

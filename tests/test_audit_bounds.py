@@ -5,13 +5,15 @@ a regression."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pyspark.sql.functions as F
 from pyspark.sql.functions import broadcast
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tools"))
 
 from audit_plans import BNLJ_BUILD_ROW_BOUND, audit, bnlj_build_rows
 

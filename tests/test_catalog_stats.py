@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from kwery_spark.catalog import analyze_tables, table
+from kwery_spark.catalog import analyze_tables, build_bucketed, table
 from kwery_spark.registry import ORACLES, QUERIES, load_all
 
 # Keys allowed to ship without a DuckDB oracle (driver records a weaker
@@ -49,6 +51,23 @@ def test_analyze_tables_records_cbo_stats(spark, sf_dir):
         (r.o_orderpriority, r["count"]) for r in want
     }
 
+
+
+def test_build_bucketed_removes_stale_warehouse_siblings(spark, sf_dir):
+    # The catalog is in-memory, so an older corpus fingerprint's bucketed
+    # copy is visible only as a directory in the warehouse. build_bucketed
+    # must remove it and leave the current build readable.
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    wh = wh.removeprefix("file://").removeprefix("file:")
+    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    sibling = os.path.join(wh, f"kwery_bkt_{base}_0000000000.db")
+    os.makedirs(os.path.join(sibling, "lineitem"), exist_ok=True)
+    open(os.path.join(sibling, "lineitem", "part-00000.parquet"), "wb").close()
+    db = build_bucketed(spark, sf_dir)
+    assert not os.path.exists(sibling)
+    assert os.path.isdir(os.path.join(wh, f"{db}.db"))
+    for name in ("orders", "lineitem"):
+        assert spark.table(f"{db}.{name}").count() == table(spark, sf_dir, name).count()
 
 def test_cbo_stats_path_value_invariance(spark, sf_dir):
     """q3/q5 switch to stats-backed CBO planning when the session has

@@ -8,6 +8,7 @@ alignment, and magic-byte container sniffing.
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 import zlib
@@ -16,7 +17,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kwery_spark.operators.multimodal import (
     _decode_real,

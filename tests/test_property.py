@@ -14,6 +14,7 @@ max_examples locally to fuzz harder.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -21,7 +22,8 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-sys.path.insert(0, "/root/repo/tools")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_ROOT, "tools"))
 from check import norm_rows  # noqa: E402
 
 KEYS = st.integers(min_value=0, max_value=5)

@@ -190,7 +190,7 @@ def test_profile_table_no_expand(spark):
     as per-column single-distinct aggregates — the multi-distinct
     Expand (x7 row multiplication through the partial aggregate, ~30 s
     of the 37 s sf30 key) must never regrow. Decomposition + A/B:
-    tools/probes/profile_decomp.py (sf30 old 38.9 -> new 10.28 s,
+    tools/probes/profile_decomp.py@d7daee1 (sf30 old 38.9 -> new 10.28 s,
     values exactly equal)."""
     from kwery_spark.plans.inspect import formatted_plan
 

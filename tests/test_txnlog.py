@@ -16,7 +16,7 @@ import threading
 import pyspark.sql.functions as F
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kwery_spark.sources.txnlog import ConflictError, TxnLogTable
 
