@@ -8,6 +8,7 @@ filters and prune columns into the vectorized parquet reader per query.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import threading
 from collections import OrderedDict
@@ -723,7 +724,9 @@ def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
     buckets. Every call first removes stale fingerprint siblings for the
     same corpus basename from the warehouse directory — unlike stats-only
     dbs they hold real data copies, and another context's databases are
-    never in this context's catalog to drop."""
+    never in this context's catalog to drop. Processes sharing a
+    warehouse must not run different fingerprints of one corpus at the
+    same time."""
     db = _bucketed_db_name(sf_dir)
     base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     # the conf echoes back as file:///path or file:/path depending on
@@ -732,10 +735,12 @@ def build_bucketed(spark: SparkSession, sf_dir: str) -> str:
     wh = wh.removeprefix("file://").removeprefix("file:")
     # database dirs carry Spark's lower-cased db name
     db_dir = f"{db}.db".lower()
-    stale = f"kwery_bkt_{base}_".lower()
+    # exactly this basename plus a fingerprint: a corpus whose basename
+    # merely extends this one (sf0.1 vs sf0.1_v2) is never touched
+    stale = re.compile(rf"kwery_bkt_{re.escape(base.lower())}_[0-9a-f]{{10}}\.db")
     if wh and os.path.isdir(wh):
         for old in os.listdir(wh):
-            if old.startswith(stale) and old != db_dir:
+            if stale.fullmatch(old) and old != db_dir:
                 shutil.rmtree(os.path.join(wh, old), ignore_errors=True)
     try:
         if spark.catalog.tableExists(f"{db}.lineitem") and _has_row_stats(

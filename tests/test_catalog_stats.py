@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -63,7 +64,14 @@ def test_build_bucketed_removes_stale_warehouse_siblings(spark, sf_dir):
     sibling = os.path.join(wh, f"kwery_bkt_{base}_0000000000.db")
     os.makedirs(os.path.join(sibling, "lineitem"), exist_ok=True)
     open(os.path.join(sibling, "lineitem", "part-00000.parquet"), "wb").close()
-    db = build_bucketed(spark, sf_dir)
+    # a corpus whose basename extends this one is a different corpus
+    other = os.path.join(wh, f"kwery_bkt_{base}_v2_0000000000.db")
+    os.makedirs(other, exist_ok=True)
+    try:
+        db = build_bucketed(spark, sf_dir)
+        assert os.path.isdir(other)
+    finally:
+        shutil.rmtree(other, ignore_errors=True)
     assert not os.path.exists(sibling)
     assert os.path.isdir(os.path.join(wh, f"{db}.db"))
     for name in ("orders", "lineitem"):

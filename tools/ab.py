@@ -11,8 +11,7 @@ several specs. Arms run in the order they first appear.
                        registry key KEY (one of --keys)
   NAME:                no override: the session's own defaults
 
---sf DIR   corpus directory (default $SPARK_GRAFT_SF_DIR, else the
-           tools/check.py gate corpus)
+--sf DIR   corpus directory (default: the tools/check.py gate corpus)
 --prep     run bench.py's _prep first (layout, ANALYZE, bucketing and the
            corpus-scaled confs); the arm's confs are applied after it
 --keys     comma-separated registry keys (default: bench.py's HEADLINE)
@@ -21,8 +20,9 @@ Every arm runs in its own child process (this script re-invoked with
 ``sys.executable``), so no JIT warmth or session state leaks between
 arms. The child puts the arm's confs on the session builder, runs
 ``bench._prep`` when asked and re-applies the confs, times each key with
-``bench._measure_spark`` (1 warm-up + best of 3, plan rebuilt per run,
-``toPandas``), then runs each key once more and hashes its values with
+``bench._measure_spark`` (its protocol: 1 warm-up + best of 3, plan
+rebuilt per run, ``toPandas``; q1/q3/q5 get one extra post-pass sample),
+then runs each key once more and hashes its values with
 tools/check.py's ``pandas_rows``/``norm_rows``.
 
 The parent prints one JSON line per arm:
@@ -109,7 +109,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
     )
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR))
+    ap.add_argument("--sf", default=DEFAULT_SF_DIR)
     ap.add_argument("--prep", action="store_true")
     ap.add_argument("--keys", default=",".join(bench.HEADLINE))
     ap.add_argument("arms", nargs="+", metavar="NAME:SPEC")
